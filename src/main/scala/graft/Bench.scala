@@ -110,11 +110,7 @@ object Bench {
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
-        // the declared query, exactly as SparkEntry exposes it (round-19:
-        // the round-18 harness-level sortShared wrap regressed the
-        // driver's 32-core bench 33% — the final-stage-reuse rewrite now
-        // lives in the query layer, applied per measured win, so the
-        // harness times fn(spark, sfDir) verbatim again)
+        // the declared query, timed verbatim as SparkEntry exposes it
         try { fn(spark, sfDir)
           .write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>

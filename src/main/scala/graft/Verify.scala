@@ -23,9 +23,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      // the declared query verbatim (round-19: the harness-level
-      // sortShared wrap moved into the query layer, so the oracle now
-      // exercises exactly the plan every consumer gets)
+      // the declared query, dumped verbatim as SparkEntry exposes it
       try fn(spark, sfDir)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -3,14 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.GraftShim
 
-/** Materialization helpers for iterative workloads. */
+/** Materialization helper for iterative workloads. */
 object Materialize {
 
   /** One AQE-off companion session per user session, created lazily.
     * `newSession()` shares the SparkContext (and our extensions) but has
     * an ISOLATED SQLConf, so planning a checkpoint there cannot race
     * with — or be observed by — queries planned concurrently in the
-    * user's session (the round-4 conf-flip hazard).
+    * user's session.
     *
     * The map is a WeakHashMap keyed on the user session: a companion
     * must not pin its user session live forever (session-per-request
@@ -30,156 +30,39 @@ object Materialize {
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.session.timeZone")
 
-  private def noAqeSession(spark: SparkSession): SparkSession =
+  private def aqeOffSession(spark: SparkSession): SparkSession =
     planners.synchronized {
       var s = planners.get(spark)
       if (s == null) { s = spark.newSession(); planners.put(spark, s) }
       s
     }
 
-  /** Share the final stage under a query's deterministic output sort.
-    *
-    * Every declared query ends in a global `orderBy` so its oracle dump
-    * is deterministic. A global sort plants Exchange(rangepartitioning),
-    * and RangePartitioner SAMPLES the exchange's child to pick bounds —
-    * a reservoir pass that consumes every child partition's FULL
-    * iterator as its own job. The child of that exchange is everything
-    * after the previous stage boundary, so the final stage computes
-    * TWICE per action: once for the sample, once for the shuffle map.
-    * For a map-only query (no exchange anywhere else) that is the whole
-    * scan + projection run twice — measured 2.0× on q78/q135/q27 at
-    * sf0.1 (R18SortProbe; optimization-guide §7.2 "duplicated
-    * subtrees": the sampler is a hidden second consumer).
-    *
-    * Fix = the §9 plan-branch-reuse rule applied to the hidden branch:
-    * lazily `localCheckpoint` the sort's child so the sample job
-    * materializes the stage once and the shuffle map re-reads blocks.
-    * The Sort stays the outermost operator over the same rows, so the
-    * output row order — and therefore the driver's oracle hash — is
-    * bit-identical; only the number of times the stage computes changes.
-    *
-    * WHERE TO APPLY (round-19, the round-18 lesson): this is a TRADE —
-    * a result-sized block-store materialization buys one fewer compute
-    * of the final stage — and round 18 shipped it unconditionally in the
-    * bench/verify HARNESS, which taxed every query whose final stage is
-    * cheap (the driver's 32-core run regressed 102/161 queries). It now
-    * lives in the QUERY layer, applied per query where a paired
-    * 32-core A/B showed a win (each site cites its numbers); the bench
-    * and verify mains time/dump the declared queries verbatim.
-    * `SPARK_GRAFT_SORTSHARED=0` turns every application into the
-    * identity — the measurement A/B switch.
-    *
-    * Scale note: the checkpoint is a non-replicated executor-memory
-    * materialization of the pre-sort result — on executor loss the job
-    * must restart (lineage is truncated), and result-sized storage
-    * replaces a shuffle that spills gracefully. Appropriate for the
-    * bounded result frames it is applied to (top-k lists, per-domain
-    * aggregates); production sinks that do not need the deterministic
-    * output order should drop the final sort instead, which removes
-    * both the exchange and the need for this helper.
-    *
-    * Identity on plans that do not end in a global Sort (1-row audit
-    * queries): no behavior change. The sort keys are remapped onto the
-    * checkpoint's fresh attribute ids positionally, so expression keys
-    * (`orderBy(md5(..))`) survive. */
-  /** Query-layer application of [[sortShared]]: wrap a declared query's
-    * (session, dir) => frame function at its registration site. Applied
-    * ONLY to queries with a paired 32-core A/B win on record
-    * (OPTIMIZATION_r19.md "sortShared allowlist") — round 18 applied the
-    * rewrite to all 163 queries from the harness and taxed every query
-    * whose final stage was already cheap. Identity under
-    * `SPARK_GRAFT_SORTSHARED=0` (the A/B switch). */
-  def sortSharedQuery(fn: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, d) => sortShared(fn(s, d))
-
-  def sortShared(df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SORTSHARED").contains("0")) return df
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.logical.Sort
-    df.queryExecution.analyzed match {
-      case Sort(order, true, child, hint) =>
-        val base = GraftShim.ofRows(df.sparkSession, child).localCheckpoint(false)
-        val basePlan = base.queryExecution.analyzed
-        val amap = AttributeMap(child.output.zip(basePlan.output))
-        val newOrder = order.map(_.transform {
-          case a: Attribute => amap.getOrElse(a, a)
-        }.asInstanceOf[SortOrder])
-        GraftShim.ofRows(df.sparkSession,
-          Sort(newOrder, global = true, basePlan, hint))
-      case _ => df
-    }
-  }
-
-  /** Re-plan `df` in the AQE-off companion session (same SparkContext,
-    * isolated SQLConf) and hand it back wrapped for the caller's
-    * session.
-    *
-    * RETIRED from every query path (round 19). Round 18 applied it to
-    * the BPE top-pair collects and q82's convergence sync on the theory
-    * that AQE's per-stage re-optimization costs more than its
-    * coalescing recovers for a 1-row driver sync. The theory holds only
-    * at LOW core counts: the static plan fixes each sync's shuffle at
-    * `spark.sql.shuffle.partitions` (= cores) tasks where AQE coalesces
-    * the KB-sized exchange to ~1, so the overhead grows linearly with
-    * the core count × rounds — the driver's paired 32c/8c runs measured
-    * the wrapped families 1.6–2.3× slower at 32 cores than at 8
-    * (VERDICT r18 #1/#3), precisely the failure mode the LPA family's
-    * recorded negative result predicted. Kept for completeness (tests
-    * pin its session-isolation semantics); do not reintroduce it on a
-    * query path without a ≥2-core-count A/B. */
-  def noAqe(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val ns = noAqeSession(spark)
-    ns.synchronized {
-      ns.conf.set("spark.sql.adaptive.enabled", "false")
-      MirroredConfs.foreach(k =>
-        spark.conf.getOption(k).foreach(ns.conf.set(k, _)))
-      GraftShim.ofRows(ns, df.queryExecution.analyzed)
-    }
-  }
-
   /** `localCheckpoint()` that PRESERVES the frame's hash partitioning.
     *
-    * Under AQE, `Dataset.localCheckpoint` captures the adaptive plan's
-    * `outputPartitioning` before the final stage layout is surfaced, so
-    * the resulting LogicalRDD reports `UnknownPartitioning` and every
-    * downstream join/agg on the partition key re-plants an exchange —
-    * exactly the per-iteration edge re-shuffle this helper exists to
-    * avoid. The checkpoint is therefore PLANNED in the AQE-off companion
-    * session (the frames checkpointed here end in an explicit keyed
-    * repartition, the one exchange shape AQE could only disturb), and the
-    * resulting LogicalRDD — now carrying the true HashPartitioning — is
-    * re-wrapped into the caller's session. The analyzed plan re-executes
-    * identically: it is fully resolved, so no catalog/temp-function state
-    * from the original session is consulted.
+    * Invariants:
+    *  - The checkpoint is planned with AQE OFF, in the companion session.
+    *    An AQE-planned `localCheckpoint` reports `UnknownPartitioning`,
+    *    so every downstream join/agg on the partition key would re-plant
+    *    an exchange. Planned statically, a frame that ends in a keyed
+    *    repartition keeps its `HashPartitioning`, and the LogicalRDD
+    *    re-wrapped into the caller's session carries it. The analyzed
+    *    plan is fully resolved, so it re-executes identically there.
+    *  - `parts = Some(n)` plans the frame at n partitions instead of
+    *    `spark.sql.shuffle.partitions` (which an AQE-off plan cannot
+    *    coalesce). The caller derives n from input bytes
+    *    ([[graft.queries.GraphQueries.graphParts]]), so loop stages get
+    *    a data-proportional task count whatever the core count.
+    *  - Every frame of one co-partitioned family must use the SAME
+    *    `parts`, or the exchange-free loop joins re-plant exchanges.
     *
     * `eager = false` still truncates lineage per call (the many-iteration
     * requirement) but folds materialization into the next action instead
     * of costing a dedicated job; with AQE off the partitioning is known
-    * statically, so laziness does not cost the partitioning capture.
-    *
-    * `parts` (round-19, guide §2 "make partitioning scale-adaptive"):
-    * because the companion plans with AQE OFF, every frame checkpointed
-    * here is otherwise frozen at `spark.sql.shuffle.partitions`
-    * (= the core count in the bench contract) partitions — and every
-    * downstream loop stage over it then schedules one task per core per
-    * round regardless of data size. R18JobProbe shows each such stage
-    * carrying a fixed per-task cost (~0.3–0.8 s of executorRunTime per
-    * 32-way tiny task at 32 cores, GC-free) that the 8-core run simply
-    * pays 4× less of — the driver's r18 paired runs measured the loop
-    * families 1.7–4× FASTER at 8 cores on identical code. Passing
-    * `parts = Some(n)` with n derived from the INPUT BYTES (the caller
-    * owns the estimate — [[graft.queries.GraphQueries.graphParts]])
-    * plans the frame at a data-proportional width instead: small inputs
-    * get few fat tasks regardless of cluster size, 100 TB inputs get
-    * the thousands of partitions their bytes demand. Co-partitioned
-    * callers must pass the SAME n for every frame of one family, or the
-    * exchange-free loop joins re-plant exchanges. */
+    * statically, so laziness does not cost the partitioning capture. */
   def checkpointPartitioned(df: DataFrame, eager: Boolean = true,
       parts: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
-    val ns = noAqeSession(spark)
+    val ns = aqeOffSession(spark)
     // serialize conf-mirror + plan per companion: two threads of the
     // same user session must not observe each other's mirrored confs
     // mid-plan (the companion is per-user-session, so this lock is
@@ -189,7 +72,7 @@ object Materialize {
       MirroredConfs.foreach(k =>
         spark.conf.getOption(k).foreach(ns.conf.set(k, _)))
       // the caller's data-derived width overrides the mirrored global
-      // (AFTER the mirror loop — see the `parts` scaladoc above)
+      // (AFTER the mirror loop)
       parts.foreach(n => ns.conf.set("spark.sql.shuffle.partitions", n.toString))
       // lazy inside the lock: the lock must cover conf-mirror + PLANNING
       // only — an eager checkpoint here would hold it for the whole

@@ -2277,11 +2277,6 @@ object DedupQueries {
        |LEFT JOIN hits h ON h.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q151_admission_gate"     -> (q151AdmissionGate _),
     "q142_containment_dedup"  -> (q142ContainmentDedup _),
@@ -2294,10 +2289,10 @@ object DedupQueries {
     "q24_dedup_exact"         -> (q24DedupExact _),
     "q25_minhash_sig"         -> (q25MinhashSig _),
     "q26_minhash_pairs"       -> (q26MinhashPairs _),
-    "q164_split_leakage"      -> shared(q164SplitLeakage _),
-    "q29_ngram_jaccard"       -> shared(q29NgramJaccard _),
-    "q27_simhash"             -> shared(q27Simhash _),
-    "q28_rolling_fingerprint" -> shared(q28RollingFingerprint _),
+    "q164_split_leakage"      -> (q164SplitLeakage _),
+    "q29_ngram_jaccard"       -> (q29NgramJaccard _),
+    "q27_simhash"             -> (q27Simhash _),
+    "q28_rolling_fingerprint" -> (q28RollingFingerprint _),
     "q83_dup_gram_fraction"   -> (q83DupGramFraction _),
     "q86_simhash_pairs"       -> (q86SimhashPairs _),
     "q170_phash_neardup"      -> (q170PhashNeardup _),

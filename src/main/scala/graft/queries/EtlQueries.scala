@@ -494,7 +494,7 @@ object EtlQueries {
   val Q96Rsd = 0.05
 
   /** Absolute slack for the q96 bound below the linear-counting regime
-    * (register collisions on ~5-element groups; calibrated by Q96Probe). */
+    * (register collisions on ~5-element groups; calibrated empirically). */
   val Q96AbsSlack = 3.0
 
   def q96RollupDistinct(s: SparkSession, dir: String): DataFrame =
@@ -892,23 +892,18 @@ object EtlQueries {
        |  WHERE o.a >= t.a AND o.b >= t.b AND (o.a > t.a OR o.b > t.b))
        |ORDER BY n_words DESC, awl_milli DESC, doc_id""".stripMargin
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q138_pareto_frontier"    -> (q138ParetoFrontier _),
     "q115_theta_sketch"       -> (q115ThetaSketch _),
     "q108_shard_manifest"     -> (q108ShardManifest _),
     "q101_weighted_sample"    -> (q101WeightedSample _),
     "q40_bernoulli_sample"    -> (q40BernoulliSample _),
-    "q41_kv_encode"           -> shared(q41KvEncode _),
+    "q41_kv_encode"           -> (q41KvEncode _),
     "q42_multimodal_features" -> (q42MultimodalFeatures _),
     "q43_heavy_hitters"       -> (q43HeavyHitters _),
     "q87_cms_frequency"       -> (q87CmsFrequency _),
     "q92_bloom_join"          -> (q92BloomJoin _),
-    "q93_quantile_sketch"     -> shared(q93QuantileSketch _),
+    "q93_quantile_sketch"     -> (q93QuantileSketch _),
     "q96_rollup_distinct"     -> (q96RollupDistinct _),
   )
 

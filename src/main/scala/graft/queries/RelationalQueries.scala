@@ -1782,18 +1782,13 @@ object RelationalQueries {
       .map { case (t, k) => skewSqlOne(t, k) }
       .mkString("", "\nUNION ALL\n", "\nORDER BY table_name, key_name")
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q163_skew_audit"       -> (q163SkewAudit _),
     "q116_asof_late_audit"  -> (q116AsofLateAudit _),
     "q60_funnel"            -> (q60Funnel _),
     "q67_path_mining"       -> (q67PathMining _),
-    "q68_star_join"         -> shared(q68StarJoin _),
-    "q69_zorder_cells"      -> shared(q69ZorderCells _),
+    "q68_star_join"         -> (q68StarJoin _),
+    "q69_zorder_cells"      -> (q69ZorderCells _),
     "q73_resample_ffill"    -> (q73ResampleFfill _),
     "q74_data_quality"      -> (q74DataQuality _),
     "q75_cohort_retention"  -> (q75CohortRetention _),
@@ -1833,7 +1828,7 @@ object RelationalQueries {
     "q12_json_trycast"      -> (q12JsonTryCast _),
     "q13_url_build_parse"   -> (q13UrlBuildParse _),
     "q14_quality_gate"      -> (q14QualityGate _),
-    "q15_hof_exists"        -> shared(q15HofExists _),
+    "q15_hof_exists"        -> (q15HofExists _),
     "q16_first_last"        -> (q16FirstLast _),
   )
 

@@ -2067,11 +2067,6 @@ object SimilarityQueries {
        |ORDER BY query_doc, rn""".stripMargin
   }
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q133_meanpool_ann"     -> (q133MeanPool _),
     "q131_maxsim_pruned"    -> (q131MaxSimPruned _),
@@ -2086,10 +2081,10 @@ object SimilarityQueries {
     "q110_semdedup"         -> (q110SemDedup _),
     "q102_hard_negatives"   -> (q102HardNegatives _),
     "q90_semantic_decontam" -> (q90SemanticDecontam _),
-    "q30_knn_bruteforce"    -> shared(q30KnnBruteForce _),
+    "q30_knn_bruteforce"    -> (q30KnnBruteForce _),
     "q31_embedding_neardup" -> (q31EmbeddingNearDup _),
-    "q32_ivf_ann"           -> shared(q32IvfAnn _),
-    "q59_kmeans_assign"     -> shared(q59KmeansAssign _),
+    "q32_ivf_ann"           -> (q32IvfAnn _),
+    "q59_kmeans_assign"     -> (q59KmeansAssign _),
     "q95_sq8_ann"           -> (q95Sq8Ann _),
     "q111_pq_adc_ann"       -> (q111PqAdcAnn _),
     "q148_opq_ann"          -> (q148OpqAnn _),

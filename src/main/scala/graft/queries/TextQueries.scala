@@ -2615,12 +2615,9 @@ object TextQueries {
             i => struct(element_at(t, i).as("l"), element_at(t, i + 1).as("r"))))
           .otherwise(array().cast("array<struct<l:string,r:string>>"))
       }
-      // AQE-planned (round-19 revert of the round-18 noAqe experiment):
-      // the static plan fixed each round's pair-count shuffle at
-      // spark.sql.shuffle.partitions tasks, so its overhead grew with
-      // core count — the driver's paired runs showed the family 1.6×
-      // SLOWER at 32 cores than at 8 (q122 0.62, q127 0.62, q132 0.62,
-      // q136 0.41 scaling ratios). AQE's small-shuffle coalescing is
+      // AQE-planned: a static plan would fix each round's pair-count
+      // shuffle at spark.sql.shuffle.partitions tasks, so its cost would
+      // grow with the core count; AQE's small-shuffle coalescing is
       // worth more than its replanning cost at every measured core count.
       val top = cur.select($"freq", explode(pairsArr).as("p"))
           .groupBy($"p.l".as("l"), $"p.r".as("r")).agg(sum($"freq").as("cnt"))
@@ -3273,28 +3270,23 @@ object TextQueries {
        |FROM k ORDER BY doc_id""".stripMargin
   }
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q139_source_drift"       -> (q139SourceDrift _),
     "q136_unigram_segment"    -> (q136UnigramSegment _),
-    "q135_html_extract"       -> shared(q135HtmlExtract _),
+    "q135_html_extract"       -> (q135HtmlExtract _),
     "q134_nfc_normalize"      -> (q134NfcNormalize _),
     "q132_wordpiece_encode"   -> (q132WordpieceEncode _),
     "q127_bpe_encode"         -> (q127BpeEncode _),
     "q122_bpe_merges"         -> (q122BpeMerges _),
     "q109_budget_select"      -> (q109BudgetSelect _),
-    "q107_quality_classifier" -> shared(q107QualityClassifier _),
-    "q105_span_corruption"  -> shared(q105SpanCorruption _),
+    "q107_quality_classifier" -> (q107QualityClassifier _),
+    "q105_span_corruption"  -> (q105SpanCorruption _),
     "q103_symbol_filter"    -> (q103SymbolFilter _),
     "q98_encoding_filter"   -> (q98EncodingFilter _),
     "q97_chunk_overlap"     -> (q97ChunkOverlap _),
     "q85_temperature_mix"   -> (q85TemperatureMix _),
     "q91_lm_quality"        -> (q91LmQualityFilter _),
-    "q78_repetition_ratio"  -> shared(q78RepetitionRatio _),
+    "q78_repetition_ratio"  -> (q78RepetitionRatio _),
     "q80_pii_redact"        -> (q80PiiRedact _),
     "q81_source_quota"      -> (q81SourceQuota _),
     "q149_adaptive_gate"    -> (q149AdaptiveGate _),
@@ -3302,12 +3294,12 @@ object TextQueries {
     "q153_gk_gate"          -> (q153GkGate _),
     "q157_gate_stream_dual" -> (q157GateStreamDual _),
     "q158_ccnet_buckets"    -> (q158CcnetBuckets _),
-    "q159_dsir_weights"     -> shared(q159DsirWeights _),
-    "q160_gk_stream_dual"   -> shared(q160GkGateStreamDual _),
+    "q159_dsir_weights"     -> (q159DsirWeights _),
+    "q160_gk_stream_dual"   -> (q160GkGateStreamDual _),
     "q168_adaptive_gate_dual" -> (q168AdaptiveGateDual _),
     "q169_drift_dual"       -> (q169DriftDual _),
-    "q161_clf_auc"          -> shared(q161ClfAuc _),
-    "q162_gate_agreement"   -> shared(q162GateAgreement _),
+    "q161_clf_auc"          -> (q161ClfAuc _),
+    "q162_gate_agreement"   -> (q162GateAgreement _),
     "q165_calibration"      -> (q165CalibrationTable _),
     "q166_source_agreement" -> (q166SourceAgreement _),
     "q167_mixture_plan"     -> (q167MixturePlan _),
@@ -3317,7 +3309,7 @@ object TextQueries {
     "q70_feature_hash"      -> (q70FeatureHash _),
     "q71_bigram_lm"         -> (q71BigramLm _),
     "q20_text_stats"        -> (q20TextStats _),
-    "q21_text_quality"      -> shared(q21TextQuality _),
+    "q21_text_quality"      -> (q21TextQuality _),
     "q22_lang_id"           -> (q22LangId _),
     "q23_token_regex_count" -> (q23TokenRegexCount _),
     "q56_stratified_split"  -> (q56StratifiedSplit _),

@@ -116,50 +116,23 @@ object AdaptiveGateStream {
     var gk = st0.gk
     var i = 0
     if (gk.isEmpty) {
-      // ---- exact phase: GateStream's Fenwick fold + a distinct
-      // counter, checking the density trigger after every doc ----
+      // ---- exact phase: GateStream's fold over the shared
+      // ScoreCounts, checking the density trigger after every doc ----
       val dom0 = st0.dom.map(_.dom).getOrElse(Map.empty[Long, Long])
       var n = st0.dom.map(_.n).getOrElse(0L)
-      val keys = (dom0.keysIterator ++ docs.iterator.map(_.score))
-        .toArray.distinct.sorted
-      val m = keys.length
-      val fen = new Array[Long](m + 1)
-      def add(i0: Int, v: Long): Unit = {
-        var j = i0 + 1
-        while (j <= m) { fen(j) += v; j += j & (-j) }
-      }
-      def cumLe(i0: Int): Long = {
-        var j = i0 + 1
-        var s = 0L
-        while (j > 0) { s += fen(j); j -= j & (-j) }
-        s
-      }
-      val counts = new Array[Long](m)
-      var distinct = 0L
-      var k = 0
-      while (k < m) {
-        val c = dom0.getOrElse(keys(k), 0L)
-        if (c != 0L) { counts(k) = c; add(k, c); distinct += 1L }
-        k += 1
-      }
+      val sc = new ScoreCounts(dom0, docs.iterator.map(_.score))
       while (i < docs.length && gk.isEmpty) {
         val r = docs(i)
-        val at = java.util.Arrays.binarySearch(keys, r.score)
-        if (counts(at) == 0L) distinct += 1L
-        counts(at) += 1L
-        add(at, 1L)
+        val le = sc.insert(r.score)
         n += 1L
         out += Verdict(r.doc_id, r.source, r.score, n, is_sketch = false,
-          thr = Double.NaN, admit = TextQueries.GateDen * cumLe(at) >= n)
-        if (distinct * DensityDen > n && n >= MinN)
-          gk = Some(migrate(keys, counts, n)) // remaining docs → sketch
+          thr = Double.NaN, admit = TextQueries.GateDen * le >= n)
+        if (sc.distinct * DensityDen > n && n >= MinN)
+          gk = Some(migrate(sc.keys, sc.counts, n)) // remaining docs → sketch
         i += 1
       }
-      if (gk.isEmpty) {
-        val dom = keys.indices.iterator
-          .filter(counts(_) != 0L).map(j => keys(j) -> counts(j)).toMap
-        return (out.result(), AdState(Some(GateStream.SourceState(dom, n)), None))
-      }
+      if (gk.isEmpty)
+        return (out.result(), AdState(Some(GateStream.SourceState(sc.dom, n)), None))
     }
     // ---- sketch phase ----
     var st = gk.get

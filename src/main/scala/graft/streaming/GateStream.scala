@@ -74,46 +74,21 @@ object GateStream {
 
   /** PRODUCTION admit fold — O((D + b)·log(D + b)) per batch: the state
     * domain and the batch's scores index into one sorted key array, a
-    * Fenwick (binary indexed) tree carries the counts, and each doc
-    * pays one O(log D) point update + one O(log D) prefix query instead
-    * of the linear domain sum. Output is bit-identical to
+    * Fenwick (binary indexed) tree ([[ScoreCounts]]) carries the counts,
+    * and each doc pays one O(log D) point update + one O(log D) prefix
+    * query instead of the linear domain sum. Output is bit-identical to
     * [[admitFoldLinear]] (same cumulative counts, same integer admit
     * test); only the data structure changed. */
   private[graft] def admitFold(dom0: Map[Long, Long], n0: Long,
       docs: Seq[DocRow]): (Seq[Verdict], Map[Long, Long], Long) = {
-    val keys = (dom0.keysIterator ++ docs.iterator.map(_.score))
-      .toArray.distinct.sorted
-    val m = keys.length
-    val fen = new Array[Long](m + 1)
-    def add(i0: Int, v: Long): Unit = {
-      var i = i0 + 1
-      while (i <= m) { fen(i) += v; i += i & (-i) }
-    }
-    def cumLe(i0: Int): Long = {
-      var i = i0 + 1
-      var s = 0L
-      while (i > 0) { s += fen(i); i -= i & (-i) }
-      s
-    }
-    val counts = new Array[Long](m)
-    var k = 0
-    while (k < m) {
-      val c = dom0.getOrElse(keys(k), 0L)
-      if (c != 0L) { counts(k) = c; add(k, c) }
-      k += 1
-    }
+    val sc = new ScoreCounts(dom0, docs.iterator.map(_.score))
     var n = n0
     val out = docs.map { r =>
-      val i = java.util.Arrays.binarySearch(keys, r.score)
-      counts(i) += 1L
-      add(i, 1L)
+      val le = sc.insert(r.score)
       n += 1L
-      Verdict(r.doc_id, r.source, r.score, n,
-        TextQueries.GateDen * cumLe(i) >= n)
+      Verdict(r.doc_id, r.source, r.score, n, TextQueries.GateDen * le >= n)
     }
-    val dom = keys.indices.iterator
-      .filter(counts(_) != 0L).map(i => keys(i) -> counts(i)).toMap
-    (out, dom, n)
+    (out, sc.dom, n)
   }
 
   /** One source fold: update the score domain, then admit iff
@@ -162,4 +137,55 @@ object GateStream {
       .select($"doc_id", $"source", $"score", $"n_seen", $"admit")
       .orderBy($"doc_id")
   }
+}
+
+/** One fold's score-domain counts: the state domain `dom0` plus the
+  * batch's `scores` index into one sorted key array, and a Fenwick
+  * (binary indexed) tree over it answers "how many counted scores are
+  * ≤ s" in O(log m) after an O(log m) insert. Every score later passed
+  * to [[insert]] must be among `scores`. Shared by [[GateStream]] and
+  * [[AdaptiveGateStream]]'s exact phase. */
+private[streaming] final class ScoreCounts(dom0: Map[Long, Long],
+    scores: Iterator[Long]) {
+  val keys: Array[Long] = (dom0.keysIterator ++ scores).toArray.distinct.sorted
+  /** Count per key (index-aligned with [[keys]]). */
+  val counts = new Array[Long](keys.length)
+  private val fen = new Array[Long](keys.length + 1)
+  /** Keys with a non-zero count. */
+  var distinct = 0L
+
+  private def add(i0: Int, v: Long): Unit = {
+    var i = i0 + 1
+    while (i < fen.length) { fen(i) += v; i += i & (-i) }
+  }
+
+  private def cumLe(i0: Int): Long = {
+    var i = i0 + 1
+    var s = 0L
+    while (i > 0) { s += fen(i); i -= i & (-i) }
+    s
+  }
+
+  locally {
+    var k = 0
+    while (k < keys.length) {
+      val c = dom0.getOrElse(keys(k), 0L)
+      if (c != 0L) { counts(k) = c; add(k, c); distinct += 1L }
+      k += 1
+    }
+  }
+
+  /** Count one more `score`; returns the count of scores ≤ it, this one
+    * included. */
+  def insert(score: Long): Long = {
+    val i = java.util.Arrays.binarySearch(keys, score)
+    if (counts(i) == 0L) distinct += 1L
+    counts(i) += 1L
+    add(i, 1L)
+    cumLe(i)
+  }
+
+  /** The non-zero counts as a (score → count) domain. */
+  def dom: Map[Long, Long] = keys.indices.iterator
+    .filter(counts(_) != 0L).map(i => keys(i) -> counts(i)).toMap
 }

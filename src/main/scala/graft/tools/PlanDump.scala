@@ -1,12 +1,9 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 
-/** Dump `.explain("formatted")` for named queries — the round plan
-  * artifacts under plans/. Mirrors the Bench session conf (AQE on, UTC,
-  * shuffle partitions = cores). SPARK_GRAFT_PLANS_SORTSHARED=1
-  * additionally wraps each query the way Bench/Verify materialize it
-  * ([[graft.operators.Materialize.sortShared]]) so the round-18
-  * final-stage-sharing shape is visible in the dump. */
+/** Dump `.explain("formatted")` for named queries — the plan artifacts
+  * under plans/. Mirrors the Bench session conf (AQE on, UTC, shuffle
+  * partitions = cores) and explains each declared query verbatim. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -17,12 +14,9 @@ object PlanDump {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val wrap = sys.env.get("SPARK_GRAFT_PLANS_SORTSHARED").contains("1")
     args.foreach { q =>
       println(s"===== $q =====")
-      val df = graft.SparkEntry.queries(q)(spark, dir)
-      (if (wrap) graft.operators.Materialize.sortShared(df) else df)
-        .explain("formatted")
+      graft.SparkEntry.queries(q)(spark, dir).explain("formatted")
     }
     spark.stop()
   }

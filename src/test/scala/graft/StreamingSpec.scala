@@ -713,6 +713,28 @@ class StreamingSpec extends SparkSuite {
     val fastMs = (System.nanoTime() - t0) / 1e6
     assert(o2l == o2f && d2l == d2f && n2l == n2f)
     assert(o2f.exists(!_.admit) && o2f.exists(_.admit))
+    // the adaptive gate's exact phase runs the same Fenwick fold: on a
+    // domain too dense to migrate (≤ 31 distinct scores) it must match
+    // the linear reference verdict for verdict and carry the same state
+    locally {
+      import graft.streaming.AdaptiveGateStream
+      import AdaptiveGateStream.AdState
+      val Seq(b1d, b2d) = Seq(0L, 5000L).map(from =>
+        mkDocs(from, 5000).map(r => r.copy(score = r.score % 31L)))
+      def adRows(rs: Seq[GateStream.DocRow]) =
+        rs.map(r => AdaptiveGateStream.DocRow(r.doc_id, r.source, r.score))
+      val (dl1, ddl1, dnl1) = GateStream.admitFoldLinear(Map.empty, 0L, b1d)
+      val (dl2, ddl2, dnl2) = GateStream.admitFoldLinear(ddl1, dnl1, b2d)
+      val (da1, sa1) = AdaptiveGateStream.adaptiveFold(AdState(None, None), adRows(b1d))
+      val (da2, sa2) = AdaptiveGateStream.adaptiveFold(sa1, adRows(b2d))
+      for ((lin, ad) <- Seq(dl1 -> da1, dl2 -> da2)) {
+        assert(ad.forall(!_.is_sketch))
+        assert(lin.map(v => (v.doc_id, v.score, v.n_seen, v.admit)) ==
+          ad.map(v => (v.doc_id, v.score, v.n_seen, v.admit)))
+      }
+      assert(sa2.dom.contains(GateStream.SourceState(ddl2, dnl2)))
+      assert(dl2.exists(!_.admit) && dl2.exists(_.admit))
+    }
     // asymptotic pin, not a wall-clock one (a loaded host must not
     // flake it): 20k docs × 20k domain is ~4·10⁸ adds linear vs ~3·10⁶
     // log-ops Fenwick — same-process ratio, generous margin
